@@ -7,8 +7,8 @@ One ``run_once()`` = one tick of the reference's 15s loop:
     end  = head - lag            (A2 confirmation lag; ref main.py:32)
     range = (cursor, end]        (A1; ref main.py:203-207)
     for each ≤batch_size chunk:  (A3; ref main.py:34-35)
-        decode → enrich → flatten/explode
-        NDJSON staging + idempotent warehouse merge (A9/A10/A12-fix)
+        decode → load_range: enrich (materialized once) → flatten/explode
+        → NDJSON staging + idempotent warehouse merge (A9/A10/A12-fix)
     cursor.set(end)              (A12; ref main.py:216)
 
 Errors are contained per tick: an exception leaves the cursor unmoved so
@@ -36,6 +36,41 @@ from bigquery_etl_spark.pipeline.sinks import merge_append, write_ndjson_staging
 
 BLOCK_LAG = 4  # ref main.py:32 JOB_BLOCK_LAG
 BLOCK_BATCH_SIZE = 1000  # ref main.py:34-35 JOB_BLOCK_BATCH_SIZE
+
+
+def load_range(
+    spark: SparkSession,
+    events: DataFrame,
+    ipfs_docs: DataFrame,
+    warehouse_dir: str,
+    staging_dir: str,
+    epoch_id: int | None = None,
+) -> tuple[int, int]:
+    """Enrich, stage and merge one range of decoded events; returns the
+    (listings, products) rows appended. The enriched range is materialized
+    once (eager ``localCheckpoint``), so the source is read once and both
+    staging writes and both merges see the same rows. Batch ticks stage to
+    ``{staging_dir}/{kind}``, stream epochs to ``{staging_dir}/{kind}/{epoch_id}``."""
+    enriched = enrich_with_docs(events, ipfs_docs=ipfs_docs).localCheckpoint()
+    listings = flatten_listings(enriched)
+    products = explode_products(enriched)
+    epoch = "" if epoch_id is None else f"/{epoch_id}"
+
+    # A9: NDJSON staging (observable contract of the reference)
+    write_ndjson_staging(listings, f"{staging_dir}/marketplace{epoch}")
+    write_ndjson_staging(products, f"{staging_dir}/dshop{epoch}")
+
+    # A10 + A12-fix: idempotent warehouse merges
+    return (
+        merge_append(
+            spark, listings, f"{warehouse_dir}/marketplace_listings",
+            keys=["block_number", "log_index"],
+        ),
+        merge_append(
+            spark, products, f"{warehouse_dir}/dshop_products",
+            keys=["block_number", "log_index", "product_id"],
+        ),
+    )
 
 
 @dataclass
@@ -95,35 +130,15 @@ class EtlBatchRunner:
                 return False
             for lo in range(start_block, end_block + 1, self.batch_size):
                 hi = min(lo + self.batch_size - 1, end_block)
-                self._process_range(lo, hi)
+                events = decode_events(self.raw_logs_source(lo, hi))
+                listings, products = load_range(
+                    self.spark, events, self.ipfs_docs, self.warehouse_dir, self.staging_dir
+                )
+                self.stats.num_marketplace_rows += listings
+                self.stats.num_dshop_rows += products
             self.cursor.set(end_block)
             return True
         except Exception as exc:  # noqa: BLE001 — A13 containment
             self.stats.num_errors += 1
             self.stats.last_error = repr(exc)
             return False
-
-    def _process_range(self, lo: int, hi: int) -> None:
-        raw = self.raw_logs_source(lo, hi)
-        events = decode_events(raw)
-        enriched = enrich_with_docs(events, ipfs_docs=self.ipfs_docs)
-        listings = flatten_listings(enriched)
-        products = explode_products(enriched)
-
-        # A9: NDJSON staging (observable contract of the reference)
-        write_ndjson_staging(listings, f"{self.staging_dir}/marketplace")
-        write_ndjson_staging(products, f"{self.staging_dir}/dshop")
-
-        # A10 + A12-fix: idempotent warehouse merges
-        self.stats.num_marketplace_rows += merge_append(
-            self.spark,
-            listings,
-            f"{self.warehouse_dir}/marketplace_listings",
-            keys=["block_number", "log_index"],
-        )
-        self.stats.num_dshop_rows += merge_append(
-            self.spark,
-            products,
-            f"{self.warehouse_dir}/dshop_products",
-            keys=["block_number", "log_index", "product_id"],
-        )

@@ -12,7 +12,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def write_ndjson_staging(df: DataFrame, path: str) -> None:
@@ -55,9 +54,3 @@ def merge_append(
         fresh.write.mode("append").parquet(path)
     return appended
 
-
-def observe_counts(df: DataFrame, name: str) -> DataFrame:
-    """A15: row-count observability via df.observe — surfaces in
-    QueryExecutionListener/StreamingQueryListener metrics instead of the
-    reference's hand-rolled counters (ref main.py:91-95, 256-266)."""
-    return df.observe(name, F.count(F.lit(1)).alias("rows"))

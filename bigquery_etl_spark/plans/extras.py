@@ -154,8 +154,8 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "source"),
 )
 def q_block_range_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """spark.range → mapInPandas fetch: the A3 scan distributed across
-    executors with the provider's 1000-block cap per call. The fetcher
+    """spark.range over ≤1000-block chunks → mapInPandas, one fetcher call
+    per chunk: the A3 scan distributed across executors. The fetcher
     stub is a closed-form function of the block number, so the oracle
     regenerates the exact rows with DuckDB's range()."""
     from bigquery_etl_spark.pipeline.schemas import RAW_LOGS_SCHEMA

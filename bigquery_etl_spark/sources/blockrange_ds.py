@@ -1,10 +1,10 @@
 """`blockrange` — a catalog-visible Python Data Source for chain event
 logs (SURVEY.md §2 A1-A4 as a first-class Spark source).
 
-The mapInPandas route (sources/incremental.py) is idiomatic but
-anonymous: the plan shows a generic Python eval, options aren't
-catalog-typed, and streaming needs a hand-rolled runner. Spark 4's
-Python Data Source API lets the same dataflow mount as a real format:
+``block_range_source`` (sources/incremental.py) is the library form the
+batch runner calls; this module mounts the same chunk plan as a named,
+catalog-visible format with typed options and a native stream reader,
+through Spark 4's Python Data Source API:
 
     spark.dataSource.register(BlockRangeDataSource)
     spark.read.format("blockrange")
@@ -16,8 +16,9 @@ Python Data Source API lets the same dataflow mount as a real format:
 
 Batch partition planning mirrors the reference's job split (ref
 main.py:34-38: ≤1000-block RPC calls, worker-pool fan-out): one
-InputPartition per ≤max_blocks_per_call chunk, executed wherever the
-scheduler places it — the 5-thread pool generalized to the cluster.
+InputPartition per ≤max_blocks_per_call chunk (``block_chunks``, the
+planner ``block_range_source`` uses), executed wherever the scheduler
+places it — the 5-thread pool generalized to the cluster.
 
 The stream reader implements the reference's poll loop (ref
 main.py:197-216): each micro-batch covers (last_offset, head − lag];
@@ -40,6 +41,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from bigquery_etl_spark.pipeline.schemas import RAW_LOGS_SCHEMA
+from bigquery_etl_spark.sources.incremental import block_chunks
 from bigquery_etl_spark.sources.rpc import http_range_fetcher, _rpc_call
 
 _COLS = [f.name for f in RAW_LOGS_SCHEMA.fields]
@@ -65,8 +67,8 @@ class _BlockRangeBatchReader(DataSourceReader):
 
     def partitions(self) -> Sequence[InputPartition]:
         return [
-            _RangePartition(lo, min(lo + self.max_blocks - 1, self.end))
-            for lo in range(self.start, self.end + 1, self.max_blocks)
+            _RangePartition(lo, hi)
+            for lo, hi in block_chunks(self.start, self.end, self.max_blocks)
         ]
 
     def read(self, partition: _RangePartition) -> Iterator[tuple]:

@@ -2,12 +2,11 @@
 
 The reference splits [start, end] into ≤1000-block chunks fanned over 5
 worker threads doing JSON-RPC getLogs (ref main.py:34-38, 147-155).
-Spark form: ``spark.range(start, end+1)`` → one row per block →
-repartition to the desired fetch parallelism → ``mapInPandas`` calls a
-pluggable per-range fetcher once per Arrow batch. Fetch parallelism =
-number of partitions (the 5-worker pool generalized to the cluster), and
-the provider's 1000-block request cap becomes the batch chunking inside
-the fetcher call.
+Spark form: ``block_chunks`` plans the ≤max_blocks_per_call chunks on
+the driver, ``spark.range`` gives one row per chunk spread over at most
+``fetch_parallelism`` partitions (the 5-worker pool generalized to the
+cluster), and ``mapInPandas`` calls a pluggable fetcher once per row —
+one provider request per chunk.
 """
 
 from __future__ import annotations
@@ -21,6 +20,11 @@ from pyspark.sql import types as T
 RangeFetcher = Callable[[int, int], list[dict]]
 
 
+def block_chunks(start: int, end: int, max_blocks: int) -> list[tuple[int, int]]:
+    """[start, end] as consecutive inclusive (lo, hi) ranges of ≤max_blocks."""
+    return [(lo, min(lo + max_blocks - 1, end)) for lo in range(start, end + 1, max_blocks)]
+
+
 def block_range_source(
     spark: SparkSession,
     start_block: int,
@@ -30,31 +34,21 @@ def block_range_source(
     fetch_parallelism: int = 5,  # ref main.py:38 JOB_MAX_WORKERS
     max_blocks_per_call: int = 1000,  # ref main.py:34-35 provider cap
 ) -> DataFrame:
-    """Fetch an event-log range as a DataFrame, distributed by block.
+    """Fetch an event-log range as a DataFrame, distributed by chunk.
 
-    Each task receives a contiguous-ish set of block numbers, groups them
-    into runs of ≤max_blocks_per_call, and invokes the fetcher per run —
-    so RPC count is ceil(range/max_blocks), independent of parallelism."""
+    Each row of a ``spark.range`` over the chunk list is one fetcher call,
+    so an evaluation makes exactly ceil(range/max_blocks) calls whatever
+    the parallelism; ``fetch_parallelism`` caps the partitions."""
     import pandas as pd
 
-    blocks = spark.range(start_block, end_block + 1).toDF("block_number")
-    blocks = blocks.repartition(fetch_parallelism)
+    chunks = block_chunks(start_block, end_block, max_blocks_per_call)
+    cols = [f.name for f in schema.fields]
 
     def fetch(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
-            nums = sorted(int(b) for b in pdf["block_number"])
-            if not nums:
-                continue
-            runs: list[tuple[int, int]] = []
-            lo = prev = nums[0]
-            for n in nums[1:]:
-                if n != prev + 1 or n - lo + 1 > max_blocks_per_call:
-                    runs.append((lo, prev))
-                    lo = n
-                prev = n
-            runs.append((lo, prev))
-            for a, b in runs:
-                rows = fetcher(a, b)
-                yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+            for i in pdf["id"]:
+                lo, hi = chunks[int(i)]
+                yield pd.DataFrame(fetcher(lo, hi), columns=cols)
 
-    return blocks.mapInPandas(fetch, schema=schema)
+    ids = spark.range(len(chunks), numPartitions=min(len(chunks), fetch_parallelism))
+    return ids.mapInPandas(fetch, schema=schema)

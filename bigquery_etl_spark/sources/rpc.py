@@ -8,8 +8,9 @@ HTTP endpoint:
 
 - ``http_head_fn(url)``      → callable returning the current head (A1 poll)
 - ``http_range_fetcher(url)``→ a ``RangeFetcher`` for ``block_range_source``
-  — executed INSIDE executor tasks, so fetch parallelism scales with the
-  cluster, not a driver thread pool (the 5-worker pool generalized).
+  — called once per ≤max_blocks_per_call chunk INSIDE executor tasks, so
+  fetch parallelism scales with the cluster, not a driver thread pool
+  (the 5-worker pool generalized).
 
 stdlib urllib only; retries with exponential backoff because at fleet
 scale a provider WILL throttle (each task retries independently; the

@@ -17,14 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from bigquery_etl_spark.pipeline.extract import (
-    decode_events,
-    enrich_with_docs,
-    explode_products,
-    flatten_listings,
-)
+from bigquery_etl_spark.pipeline.extract import decode_events
+from bigquery_etl_spark.pipeline.runner import load_range
 from bigquery_etl_spark.pipeline.schemas import RAW_LOGS_SCHEMA
-from bigquery_etl_spark.pipeline.sinks import merge_append, write_ndjson_staging
 
 
 def start_stream_pipeline(
@@ -88,30 +83,15 @@ def start_stream_pipeline_from(
     checkpoint_dir: str,
     available_now: bool = True,
 ) -> StreamingQuery:
-    """Attach decode → enrich → flatten/explode → dual-sink foreachBatch
-    to any streaming raw-log DataFrame."""
+    """Attach decode → foreachBatch ``load_range`` (the batch runner's
+    enrich → flatten/explode → dual sink) to any streaming raw-log
+    DataFrame."""
     events = decode_events(raw_stream)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():  # A11 short-circuit
             return
-        enriched = enrich_with_docs(batch_df, ipfs_docs=ipfs_docs)
-        listings = flatten_listings(enriched)
-        products = explode_products(enriched)
-        write_ndjson_staging(listings, f"{staging_dir}/marketplace/{epoch_id}")
-        write_ndjson_staging(products, f"{staging_dir}/dshop/{epoch_id}")
-        merge_append(
-            spark,
-            listings,
-            f"{warehouse_dir}/marketplace_listings",
-            keys=["block_number", "log_index"],
-        )
-        merge_append(
-            spark,
-            products,
-            f"{warehouse_dir}/dshop_products",
-            keys=["block_number", "log_index", "product_id"],
-        )
+        load_range(spark, batch_df, ipfs_docs, warehouse_dir, staging_dir, epoch_id)
 
     writer = events.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir

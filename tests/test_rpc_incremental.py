@@ -5,14 +5,16 @@ stub").
 An http.server thread plays the Ethereum provider: eth_blockNumber
 returns a mutable head, eth_getLogs returns deterministic logs (same
 shape as pipeline/fixtures.py). The EtlBatchRunner polls it over real
-HTTP, fetches ranges from INSIDE executor tasks via mapInPandas, and
-advances its cursor — the reference's whole loop (ref main.py:197-219)
-with the network boundary actually crossed.
+HTTP, fetches each ≤max_blocks_per_call chunk exactly once from INSIDE
+executor tasks, stages and merges what it fetched, and advances its
+cursor — the reference's whole loop (ref main.py:197-219) with the
+network boundary actually crossed.
 """
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from bigquery_etl_spark.pipeline.cursor import CursorStore
 from bigquery_etl_spark.pipeline.fixtures import START_BLOCK, make_raw_logs, make_ipfs_docs
@@ -67,7 +69,17 @@ def test_live_rpc_incremental_loop(spark, tmp_path, rpc_url):
     assert runner.cursor.get() == START_BLOCK + 19
     wh = spark.read.parquet(str(tmp_path / "wh" / "marketplace_listings"))
     assert wh.count() == 20 * 2  # foreign-contract events filtered out (A4)
-    assert _RpcStub.n_getlogs >= 2  # range actually fetched over HTTP
+    # ranges of 16 + 4 blocks, chunked ≤10: 10+6, then 4 — one call each
+    assert _RpcStub.n_getlogs == 3
+    # each range overwrites staging: it holds exactly the last range's warehouse keys
+    for kind, table, keys in (
+        ("marketplace", "marketplace_listings", ["block_number", "log_index"]),
+        ("dshop", "dshop_products", ["block_number", "log_index", "product_id"]),
+    ):
+        rows = spark.read.parquet(str(tmp_path / "wh" / table))
+        staged = spark.read.schema(rows.schema).json(str(tmp_path / "stage" / kind))
+        last = rows.filter(F.col("block_number").between(START_BLOCK + 16, START_BLOCK + 19))
+        assert sorted(staged.select(*keys).collect()) == sorted(last.select(*keys).collect())
 
     # Tick 2: head unchanged → lag window empty → short-circuit, no work.
     before = _RpcStub.n_getlogs
@@ -77,6 +89,7 @@ def test_live_rpc_incremental_loop(spark, tmp_path, rpc_url):
     # Tick 3: head advances 10 → exactly the 10 new blocks land, no dupes.
     _RpcStub.head = START_BLOCK + 33
     assert runner.run_once() is True
+    assert _RpcStub.n_getlogs == before + 1  # 10 blocks: one chunk, one call
     assert runner.cursor.get() == START_BLOCK + 29
     wh = spark.read.parquet(str(tmp_path / "wh" / "marketplace_listings"))
     assert wh.count() == 30 * 2

@@ -49,11 +49,13 @@ def test_partitioned_write_prunes(spark, tmp_path):
     assert "PartitionFilters" in plan
 
 
-def test_block_range_source_chunks_and_rows(spark):
-    calls: list[tuple[int, int]] = []
+def test_block_range_source_chunks_and_rows(spark, tmp_path):
+    # the fetcher runs in Python workers: record its calls in a file
+    log = tmp_path / "calls.txt"
 
     def fetcher(lo: int, hi: int) -> list[dict]:
-        calls.append((lo, hi))
+        with open(log, "a") as f:
+            f.write(f"{lo} {hi}\n")
         return [
             {
                 "block_number": b,
@@ -66,14 +68,17 @@ def test_block_range_source_chunks_and_rows(spark):
             for b in range(lo, hi + 1)
         ]
 
-    df = block_range_source(
-        spark, 100, 199, fetcher, RAW_LOGS_SCHEMA, fetch_parallelism=4, max_blocks_per_call=30
-    )
-    rows = df.collect()
-    assert len(rows) == 100
-    assert sorted(r.block_number for r in rows) == list(range(100, 200))
-    # provider cap respected in every call
-    assert all(hi - lo + 1 <= 30 for lo, hi in calls)
+    for parallelism in (1, 4):
+        log.write_text("")
+        df = block_range_source(
+            spark, 100, 199, fetcher, RAW_LOGS_SCHEMA,
+            fetch_parallelism=parallelism, max_blocks_per_call=30,
+        )
+        rows = df.collect()
+        assert sorted(r.block_number for r in rows) == list(range(100, 200))
+        # one call per ≤30-block chunk, whatever the parallelism
+        calls = sorted(tuple(map(int, line.split())) for line in log.read_text().splitlines())
+        assert calls == [(100, 129), (130, 159), (160, 189), (190, 199)]
 
 
 def test_point_in_interval_join_matches_nested_loop(spark):
