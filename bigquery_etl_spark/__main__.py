@@ -9,9 +9,14 @@ the reference service needs a shell surface too::
     python -m bigquery_etl_spark run q_tpch_q3 --explain
     python -m bigquery_etl_spark oracle q_agg_hash   # print the twin SQL
     python -m bigquery_etl_spark sql "SELECT ... FROM lineitem ..."
+    python -m bigquery_etl_spark profile q_agg_hash [q_b ...] [--sf-dir DIR] [--runs 3] [--json]
 
 ``sql`` registers every fixture table as a temp view first, so ad-hoc
 ANSI SQL works against the same data the declared queries see.
+``profile`` times queries exactly as ``bench.py`` does (bench session,
+warm-up, managed layout, best of ``--runs``) and prints where each best
+run's wall went: build, analysis, optimization, planning, execution,
+jobs, stages, tasks, shuffle and spill bytes, and the top operators.
 """
 
 from __future__ import annotations
@@ -98,6 +103,40 @@ def cmd_sql(args: argparse.Namespace) -> int:
     return 0
 
 
+def cmd_profile(args: argparse.Namespace) -> int:
+    from bigquery_etl_spark import profile
+    from bigquery_etl_spark.registry import all_queries
+
+    registry = all_queries()
+    unknown = [q for q in args.queries if q not in registry]
+    if unknown:
+        print(f"unknown query {unknown[0]!r}; try `list`", file=sys.stderr)
+        return 2
+    specs = [registry[q] for q in args.queries]
+    spark = profile.bench_session("bigquery-etl-spark-profile")
+    errors = profile.warm_up(spark, specs)
+    if errors:
+        print(json.dumps(errors), file=sys.stderr)
+        return 1
+    query_dir, _ = profile.ingest(spark, args.sf_dir)
+    profiler = profile.Profiler(spark)
+    for spec in specs:
+        layers = profiler.timed_run(spec, query_dir, args.runs)
+        if args.json:
+            print(json.dumps({"query": spec.name, **layers}))
+            continue
+        print(f"{spec.name}: wall {layers['wall_s']:.3f}s = build "
+              f"{layers['build_s']:.3f} + analysis {layers['analysis_s']:.3f} "
+              f"+ optimization {layers['optimization_s']:.3f} + planning "
+              f"{layers['planning_s']:.3f} + execution {layers['execution_s']:.3f}")
+        print(f"  jobs {layers['jobs']}  stages {layers['stages']}  tasks "
+              f"{layers['tasks']}  shuffle {layers['shuffle_bytes']:,} B  "
+              f"spill {layers['spill_bytes']:,} B  rows {layers['rows']}")
+        for op in layers["top_operators"]:
+            print(f"  {op['time_s']:8.3f}s  {op['name']} #{op['id']}  rows {op['rows']}")
+    return 0
+
+
 def cmd_corpus(args: argparse.Namespace) -> int:
     from bigquery_etl_spark.pipeline.corpus import CorpusBuilder
 
@@ -145,6 +184,13 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--wide", action="store_true")
     p.add_argument("--explain", action="store_true")
     p.set_defaults(fn=cmd_sql)
+
+    p = sub.add_parser("profile", help="time queries as bench.py does, layer by layer")
+    p.add_argument("queries", nargs="+")
+    p.add_argument("--sf-dir", default=DEFAULT_SF_DIR)
+    p.add_argument("--runs", type=int, default=3, help="best of N timed runs")
+    p.add_argument("--json", action="store_true", help="one JSON object per query")
+    p.set_defaults(fn=cmd_profile)
 
     p = sub.add_parser("corpus", help="incremental training-corpus builder")
     p.add_argument("action", choices=["ingest", "stats", "manifest"])

@@ -6324,7 +6324,8 @@ def _rewrite_ml_tfidf_over(sql: str) -> str:
     # tests/test_plan_shapes.py::test_pinned_cte_exchange_reuse.
     #
     # r13-opt round 2 (guide §2.3/§2.4 — shuffle fewer bytes, remove
-    # shuffles outright; profiled with tools/profile_query.py at sf0.1):
+    # shuffles outright; profiled at sf0.1 with
+    # bigquery_etl_spark/profile.py):
     # (a) tf was explode(__toks) + GROUP BY (__toks, __t) — an
     #     aggregation whose SHUFFLE KEY CARRIES THE WHOLE TOKEN ARRAY
     #     (59 MB exchange at sf0.1, and the planner then broadcast the
@@ -6351,13 +6352,6 @@ def _rewrite_ml_tfidf_over(sql: str) -> str:
     # plans/r13/q_ml_tfidf_after.txt. Oracle-verified identical
     # (q_ml_tfidf, q_ml_idf at sf0.001 + sf0.01).
     rl_pairs = _ml_bag_of_words_rewriter(["__toks"])
-    import os as _os
-
-    vocab_bc = (
-        "/*+ BROADCAST(__tfd), BROADCAST(__tfbo) */ "
-        if _os.environ.get("SPARK_GRAFT_TFIDF_BROADCAST_VOCAB", "1") == "1"
-        else "/*+ BROADCAST(__tfbo) */ "
-    )
     body = (
         "WITH __tfb AS (SELECT *, ("
         + tok_expr
@@ -6412,12 +6406,7 @@ def _rewrite_ml_tfidf_over(sql: str) -> str:
         # BY CONSTRUCTION (one per bucket), so its broadcast is
         # unconditionally safe at any scale. The vocabulary (__tfd) is
         # vocab-sized: broadcasting it is the right plan whenever it
-        # fits (typical corpora — vocab ≪ corpus) and is the
-        # parameterised default; export SPARK_GRAFT_TFIDF_BROADCAST
-        # _VOCAB=0 for corpora whose vocabulary could exceed Spark's
-        # 8 GB broadcast cap, falling back to the planner's shuffled
-        # join on __term. Read at translate time (translate results
-        # are memoized per statement text).
+        # fits (typical corpora — vocab ≪ corpus).
         #
         # r13-opt round 3 NOTE (measured, NOT applied): folding __tfbo
         # and __tfn INTO the vocabulary relation before broadcasting
@@ -6428,7 +6417,7 @@ def _rewrite_ml_tfidf_over(sql: str) -> str:
         # subquery N (0.62→1.34 s: extra sorts + subquery job). The
         # sibling-broadcast shape below keeps the three tiny builds
         # CONCURRENT and stays the fastest measured form.
-        "__tfvec AS (SELECT " + vocab_bc + "__toks, "
+        "__tfvec AS (SELECT /*+ BROADCAST(__tfd), BROADCAST(__tfbo) */ __toks, "
         "SORT_ARRAY(COLLECT_LIST(STRUCT("
         "CAST(__off + __lr AS BIGINT) AS index, "
         + (

@@ -12,7 +12,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Opt-in analyzed-plan cache (SPARK_GRAFT_LOAD_CACHE=1, set by bench.py):
+# Opt-in analyzed-plan cache (SPARK_GRAFT_LOAD_CACHE=1, set by the bench
+# session in bigquery_etl_spark/profile.py):
 # every load() otherwise re-runs file listing + parquet footer schema
 # read in the JVM (~50-150ms per table per query — pure driver-side
 # constant overhead, identical at any data scale). DataFrames are

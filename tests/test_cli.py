@@ -39,3 +39,20 @@ def test_run_json_round_trips():
     assert p.returncode == 0, p.stderr[-2000:]
     rows = json.loads(p.stdout.strip().splitlines()[-1])
     assert rows and all("lang" in r for r in rows)
+
+
+def test_profile_json_prints_every_layer(sf_dir):
+    from bigquery_etl_spark.profile import LAYER_KEYS
+
+    p = _run("profile", "q_doc_stats", "--sf-dir", sf_dir, "--runs", "1", "--json")
+    assert p.returncode == 0, p.stderr[-2000:]
+    lines = [line for line in p.stdout.strip().splitlines() if line.startswith("{")]
+    assert len(lines) == 1
+    layers = json.loads(lines[0])
+    assert layers["query"] == "q_doc_stats"
+    assert set(LAYER_KEYS) <= set(layers)
+    assert layers["jobs"] >= 1 and layers["top_operators"]
+
+
+def test_profile_unknown_query_exits_2():
+    assert _run("profile", "q_nope").returncode == 2

@@ -69,6 +69,18 @@ REDEFINED: dict[str, str] = {
 }
 
 
+def normalize(rec: dict) -> dict:
+    """Per-query seconds under "queries" for either line form: bench.py's
+    compact line carries integer centiseconds under "matched_cs", keyed
+    without the "q_" prefix; older recordings carry seconds under
+    "queries"."""
+    if rec.get("matched_cs") and not rec.get("queries"):
+        rec = {**rec, "queries": {
+            f"q_{k}": cs / 100 for k, cs in rec["matched_cs"].items()
+        }}
+    return rec
+
+
 def _all_rounds() -> list[dict]:
     """Parsed per-query seconds from every prior recording: driver
     BENCH_r*.json plus builder-local tools/bench_local/*.json — local
@@ -84,7 +96,9 @@ def _all_rounds() -> list[dict]:
         with open(path) as f:
             rec = json.load(f)
         # local controlled sweeps are saved as the raw bench JSON line
-        parsed = rec.get("parsed") or (rec if rec.get("queries") else None)
+        parsed = rec.get("parsed") or (
+            rec if rec.get("queries") or rec.get("matched_cs") else None
+        )
         if not parsed and rec.get("tail"):
             for line in reversed(rec["tail"].strip().splitlines()):
                 i = line.find("{")
@@ -103,6 +117,7 @@ def _all_rounds() -> list[dict]:
             if pairs:
                 parsed = {"queries": {n: float(s) for n, s in pairs},
                           "_partial": True}
+        parsed = normalize(parsed) if parsed else None
         if parsed and parsed.get("queries"):
             out.append(parsed)
     return out
@@ -145,7 +160,7 @@ def current_run(argv: list[str]) -> dict:
     # bench prints ONE json line (possibly after spark noise)
     for line in reversed(text.strip().splitlines()):
         if line.startswith("{"):
-            return json.loads(line)
+            return normalize(json.loads(line))
     raise SystemExit("gate: no JSON line in bench output")
 
 

@@ -6,7 +6,7 @@ floor-bound queries. This probe times a query list on the key-shifted
 ~sf1 build (tools/scale_bench.py build(), 10 copies, 64-file tables) at
 whatever core count $SPARK_GRAFT_CPUS says, with bench-style protocol:
 warm-up pass at the same scale first (codegen compiled), then
-best-of-N (default 2) through the noop sink.
+best-of-N (default 2) through bigquery_etl_spark/profile.py.
 
 Usage:
     SPARK_GRAFT_CPUS=32 python tools/core_ratio_probe.py [--queries a,b]
@@ -53,6 +53,7 @@ def main() -> None:
 
     from tools.scale_bench import build
 
+    from bigquery_etl_spark import profile
     from bigquery_etl_spark.registry import all_queries
     from bigquery_etl_spark.session import get_spark
 
@@ -95,31 +96,18 @@ def main() -> None:
         print(json.dumps({"phase": "build", "sec": round(time.perf_counter() - t0, 1)}))
 
     registry = all_queries()
-    names = [n for n in args.queries.split(",") if n in registry]
+    specs = [registry[n] for n in args.queries.split(",") if n in registry]
     # warm-up at the probe scale: codegen + broadcast paths compiled
-    for name in names:
-        try:
-            registry[name].fn(spark, args.out).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception as exc:  # noqa: BLE001
-            print(f"WARMFAIL {name}: {exc}", file=sys.stderr)
+    for name, err in profile.warm_up(spark, specs, args.out).items():
+        print(f"WARMFAIL {name}: {err}", file=sys.stderr)
 
+    profiler = profile.Profiler(spark)
     timings: dict[str, float] = {}
-    for name in names:
-        spark.sparkContext.setJobDescription(f"core-ratio {name}")
-        best = float("inf")
+    for spec in specs:
         try:
-            for _ in range(args.runs):
-                t0 = time.perf_counter()
-                registry[name].fn(spark, args.out).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - t0)
+            timings[spec.name] = round(profiler.timed_run(spec, args.out, args.runs)["wall_s"], 2)
         except Exception as exc:  # noqa: BLE001
-            print(f"FAIL {name}: {exc}", file=sys.stderr)
-            continue
-        timings[name] = round(best, 2)
+            print(f"FAIL {spec.name}: {exc}", file=sys.stderr)
     print(
         json.dumps(
             {

@@ -12,7 +12,9 @@ a crawl corpus.
 Usage:
     python tools/scale_bench.py [--copies 10] [--queries q_agg_hash,...]
 
-Prints one JSON line per query: {"query", "sec", "rows"} and a summary.
+Prints one JSON line per query — {"query", "sec", "spill_mb",
+"peak_mem_mb", "shuffle_write_mb", "rows"}, all from the one timed run
+(bigquery_etl_spark/profile.py) — and a summary.
 This is a dev/profiling tool, not part of the driver contract
 (bench.py stays the per-round artifact).
 """
@@ -263,16 +265,10 @@ def main() -> None:
         "per-stage max/median task-time ratios from the event log",
     )
     ap.add_argument(
-        "--profile",
-        action="store_true",
-        help="also report per-query spill / peak-memory / shuffle-write "
-        "(executes via the plan instance so metrics are readable)",
-    )
-    ap.add_argument(
         "--all",
         action="store_true",
         help="run EVERY registered query (the full-registry sf1 soak, "
-        "VERDICT r3 item 1); implies --profile",
+        "VERDICT r3 item 1)",
     )
     ap.add_argument(
         "--jsonl",
@@ -282,9 +278,8 @@ def main() -> None:
         "to tools/make_scale_md.py)",
     )
     args = ap.parse_args()
-    if args.all:
-        args.profile = True
 
+    from bigquery_etl_spark import profile
     from bigquery_etl_spark.registry import all_queries
     from bigquery_etl_spark.session import get_spark
 
@@ -358,16 +353,11 @@ def main() -> None:
         # ratios (measured: a scan stage with uniform 6 KB inputs showed
         # 0.15 s vs 1.7 s bimodal tasks, cold). The gate should see
         # steady-state skew only.
-        for name in args.queries.split(","):
-            spec = registry.get(name)
-            if spec is not None:
-                try:
-                    spec.fn(spark, args.out).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                except Exception:
-                    pass  # the measured loop reports the error
+        profile.warm_up(
+            spark, [registry[n] for n in args.queries.split(",") if n in registry], args.out
+        )  # the measured loop reports the errors
     queries_start_ms = int(time.time() * 1000)
+    profiler = profile.Profiler(spark)
     total = 0.0
     results = {}
     jsonl = open(args.jsonl, "a") if args.jsonl else None
@@ -375,21 +365,8 @@ def main() -> None:
         spec = registry.get(name)
         if spec is None:
             continue
-        t0 = time.perf_counter()
         try:
-            if args.profile:
-                from tools.profile_query import metrics_summary
-
-                plan = spec.fn(spark, args.out)._jdf.queryExecution().executedPlan()
-                rows = plan.execute().count()
-                extra = {
-                    k: round(v / 1e6, 1) for k, v in metrics_summary(plan).items()
-                }
-                extra = {k.replace("_bytes", "_mb"): v for k, v in extra.items()}
-                extra["rows"] = rows
-            else:
-                spec.fn(spark, args.out).write.format("noop").mode("overwrite").save()
-                extra = {}
+            layers = profiler.timed_run(spec, args.out, runs=1)
         except Exception as e:  # record and continue — one failure must not hide the rest
             rec = {"query": name, "error": str(e)[:300]}
             print(json.dumps(rec))
@@ -397,10 +374,17 @@ def main() -> None:
                 jsonl.write(json.dumps({**rec, "copies": args.copies}) + "\n")
                 jsonl.flush()
             continue
-        sec = round(time.perf_counter() - t0, 2)
+        sec = round(layers["wall_s"], 2)
         total += sec
         results[name] = sec
-        rec = {"query": name, "sec": sec, **extra}
+        rec = {
+            "query": name,
+            "sec": sec,
+            "spill_mb": round(layers["spill_bytes"] / 1e6, 1),
+            "peak_mem_mb": round(layers["peak_mem_bytes"] / 1e6, 1),
+            "shuffle_write_mb": round(layers["shuffle_bytes"] / 1e6, 1),
+            "rows": layers["rows"],
+        }
         print(json.dumps(rec))
         if jsonl:
             jsonl.write(json.dumps({**rec, "copies": args.copies}) + "\n")
