@@ -83,6 +83,7 @@ class EtlStats:
     num_ticks: int = 0
     num_errors: int = 0
     last_error: str | None = None
+    head_block: int | None = None  # last polled chain head
 
     def as_dict(self) -> dict:
         return {
@@ -92,6 +93,7 @@ class EtlStats:
             "num_ticks": self.num_ticks,
             "num_errors": self.num_errors,
             "last_error": self.last_error,
+            "head_block": self.head_block,
         }
 
 
@@ -125,7 +127,8 @@ class EtlBatchRunner:
         self.stats.num_ticks += 1
         try:
             start_block = self.cursor.get() + 1
-            end_block = self.head_fn() - self.block_lag
+            self.stats.head_block = self.head_fn()
+            end_block = self.stats.head_block - self.block_lag
             if end_block < start_block:
                 return False
             for lo in range(start_block, end_block + 1, self.batch_size):

@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def write_ndjson_staging(df: DataFrame, path: str) -> None:
@@ -30,11 +31,14 @@ def merge_append(
     """A10+A12 fix: append only key-sets not already in the table.
 
     Plan: left_anti join the batch against the existing table's keys,
-    then append. The anti join probes only ``keys`` columns (column-
-    pruned scan of the target). With a Delta/Iceberg catalog this becomes
-    MERGE INTO; on plain parquet the anti-join append gives the same
-    idempotence as long as one writer runs at a time — which the
-    reference also required (app.yaml:14-15, single instance).
+    then append. The probe reads only the ``keys`` columns, with the
+    batch's schema for them (no footer-inference job). The anti-join is
+    executed once: its result is materialized (eager ``localCheckpoint``)
+    and both the ``count()`` and the append read that. With a
+    Delta/Iceberg catalog this becomes MERGE INTO; on plain parquet the
+    anti-join append gives the same idempotence as long as one writer
+    runs at a time — which the reference also required (app.yaml:14-15,
+    single instance).
 
     Partition-scale note: at 100 TB the target scan prunes to the
     batch's partition range when the table is partitioned by a key
@@ -44,13 +48,14 @@ def merge_append(
     if os.path.isdir(path) and any(
         f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
     ):
-        existing_keys = spark.read.parquet(path).select(*keys)
-        fresh = df.join(existing_keys, keys, "left_anti")
+        key_schema = StructType([df.schema[k] for k in keys])
+        existing_keys = spark.read.schema(key_schema).parquet(path)
+        fresh = df.join(existing_keys, keys, "left_anti").localCheckpoint()
     else:
         fresh = df
-    # A11: empty-input short-circuit (ref main.py:162-165)
+    # A11: empty-input short-circuit (ref main.py:162-165) — an empty
+    # append would still write a schema-only part file
     appended = fresh.count()
     if appended:
         fresh.write.mode("append").parquet(path)
     return appended
-

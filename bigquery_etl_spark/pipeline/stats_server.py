@@ -2,9 +2,10 @@
 
 The reference serves uptime / cursor / row counters / error counts from
 a Flask route. Here: a stdlib HTTP shim (no web framework dependency)
-over ``EtlStats`` plus, when given streaming queries, their
-``lastProgress`` — the Spark-native metric source the reference's
-hand-rolled counters approximate.
+over ``EtlStats``, the cursor (a driver-side file read, no Spark job)
+and the head lag (last polled head minus cursor), plus, when given
+streaming queries, their ``lastProgress`` — the Spark-native metric
+source the reference's hand-rolled counters approximate.
 """
 
 from __future__ import annotations
@@ -29,6 +30,8 @@ class StatsServer:
             body["cursor_block"] = self.cursor_getter()
         except Exception as exc:  # noqa: BLE001 — stats must never 500
             body["cursor_block"] = f"error: {exc!r}"
+        head, cursor = body["head_block"], body["cursor_block"]
+        body["lag_blocks"] = head - cursor if head is not None and isinstance(cursor, int) else None
         body["streams"] = [q.lastProgress for q in self.streaming_queries if q.lastProgress]
         return body
 

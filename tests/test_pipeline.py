@@ -7,8 +7,10 @@ and both enrichment strategies.
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from bigquery_etl_spark.pipeline.cursor import CursorStore
 from bigquery_etl_spark.pipeline.extract import (
@@ -26,8 +28,11 @@ from bigquery_etl_spark.pipeline.fixtures import (
 from bigquery_etl_spark.pipeline.runner import EtlBatchRunner
 from bigquery_etl_spark.pipeline.schemas import (
     DSHOP_PRODUCTS_SCHEMA,
+    ETL_CURSOR_SCHEMA,
     MARKETPLACE_LISTINGS_SCHEMA,
 )
+from bigquery_etl_spark.pipeline.sinks import merge_append
+from bigquery_etl_spark.pipeline.stats_server import StatsServer
 
 
 @pytest.fixture()
@@ -151,3 +156,136 @@ def test_runner_error_containment(spark, pipeline_inputs, tmp_path):
     assert r.run_once() is False  # A13: contained
     assert r.stats.num_errors == 1 and "rpc down" in r.stats.last_error
     assert r.cursor.get() == START_BLOCK - 1  # cursor unmoved -> retry next tick
+
+
+def _cursor_dirs(path):
+    return sorted(os.listdir(path))
+
+
+def test_cursor_round_trip_and_spark_readable(spark, tmp_path):
+    path = str(tmp_path / "cursor")
+    store = CursorStore(spark, path, start_block=99)
+    assert store.get() == 99  # no version yet
+    store.set(500)
+    assert store.get() == 500
+    store.set(600)
+    assert CursorStore(spark, path).get() == 600
+    row = spark.read.schema(ETL_CURSOR_SCHEMA).parquet(f"{path}/v1").collect()
+    assert [(r.id, r.block_number) for r in row] == [(1, 600)]
+    assert row[0].created_at is not None and row[0].updated_at is not None
+
+
+def test_cursor_keeps_last_two_versions(spark, tmp_path):
+    path = str(tmp_path / "cursor")
+    store = CursorStore(spark, path)
+    for b in range(5):
+        store.set(b)
+    assert _cursor_dirs(path) == ["v3", "v4"]
+    assert store.get() == 4
+
+
+def test_cursor_runs_no_spark_job(spark, tmp_path):
+    store = CursorStore(spark, str(tmp_path / "cursor"))
+    sc = spark.sparkContext
+    sc.setJobGroup("cursor-no-jobs", "cursor set/get")
+    try:
+        store.set(7)
+        assert store.get() == 7
+    finally:
+        sc.setJobGroup("", "")
+    assert sc.statusTracker().getJobIdsForGroup("cursor-no-jobs") == []
+
+
+def test_cursor_reads_spark_written_version(spark, tmp_path):
+    """A deployment whose cursor was written by Spark's parquet writer
+    (INT96 timestamps, ``_SUCCESS`` marker) resumes from it."""
+    path = str(tmp_path / "cursor")
+    prev = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    try:
+        spark.range(1).select(
+            F.lit(1).cast("int").alias("id"),
+            F.lit(700).cast("long").alias("block_number"),
+            F.current_timestamp().alias("created_at"),
+            F.current_timestamp().alias("updated_at"),
+        ).coalesce(1).write.parquet(f"{path}/v0")
+    finally:
+        spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
+    store = CursorStore(spark, path)
+    assert store.get() == 700
+    store.set(701)
+    assert store.get() == 701
+    assert _cursor_dirs(path) == ["v0", "v1"]
+
+
+def test_cursor_skips_version_left_by_crashed_writer(spark, tmp_path):
+    """A ``v{n}`` holding only ``_temporary/`` (a writer that died mid-job)
+    is not a version: ``get`` falls back to the last complete one, and the
+    next ``set`` numbers past it and prunes it — the runner keeps advancing."""
+    path = str(tmp_path / "cursor")
+    store = CursorStore(spark, path)
+    store.set(500)
+    os.makedirs(f"{path}/v1/_temporary/0")
+    assert store.get() == 500
+    store.set(501)
+    assert store.get() == 501
+    assert _cursor_dirs(path) == ["v0", "v2"]
+
+
+def test_merge_append_partly_overlapping_batch(spark, tmp_path):
+    path = str(tmp_path / "t")
+    keys = ["block_number", "log_index"]
+
+    def batch(n):
+        return spark.range(n).select(
+            F.col("id").alias("block_number"),
+            (F.col("id") % 2).alias("log_index"),
+            F.concat(F.lit("v"), F.col("id").cast("string")).alias("payload"),
+        )
+
+    def parquet_files():
+        return sum(f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs)
+
+    assert merge_append(spark, batch(4), path, keys) == 4
+    assert merge_append(spark, batch(10), path, keys) == 6
+    table = spark.read.parquet(path)
+    assert table.count() == 10
+    assert table.select(*keys).distinct().count() == 10
+    files = parquet_files()
+    assert merge_append(spark, batch(10), path, keys) == 0  # full replay
+    assert parquet_files() == files  # A11: nothing written
+    assert spark.read.parquet(path).count() == 10
+
+
+def _idle_runner(spark, tmp_path, head_fn):
+    """A runner whose cursor sits at 100: a head below 105 leaves nothing to
+    load (end = head - lag 4 is behind the cursor), so no Spark work runs."""
+    return EtlBatchRunner(
+        spark,
+        raw_logs_source=None,
+        ipfs_docs=None,
+        head_fn=head_fn,
+        warehouse_dir=str(tmp_path / "w"),
+        staging_dir=str(tmp_path / "s"),
+        cursor=CursorStore(spark, str(tmp_path / "c"), start_block=100),
+    )
+
+
+def test_stats_head_block(spark, tmp_path):
+    """The last polled head is recorded even when the tick has nothing to do."""
+    r = _idle_runner(spark, tmp_path, lambda: 102)
+    assert StatsServer(r).payload()["head_block"] is None
+    assert r.run_once() is False
+    assert StatsServer(r).payload()["head_block"] == 102
+
+
+def test_stats_lag_blocks(spark, tmp_path):
+    heads = iter([103, 106])
+    r = _idle_runner(spark, tmp_path, lambda: next(heads))
+    server = StatsServer(r)
+    assert server.payload()["lag_blocks"] is None  # no head polled yet
+    r.run_once()
+    assert server.payload()["lag_blocks"] == 3
+    r.cursor.set(104)
+    r.run_once()  # head 106
+    assert server.payload()["lag_blocks"] == 2
