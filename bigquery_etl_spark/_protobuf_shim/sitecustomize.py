@@ -1,33 +1,11 @@
-"""Auto-imported at Python startup when this dir leads PYTHONPATH:
-gives Spark PYTHON WORKERS the vendored google.protobuf (see
-bigquery_etl_spark/_vendor.py — the driver cannot edit a worker's
-sys.path after the fact, so the shim must ride interpreter startup)."""
-
-import os
-import sys
-
-_GAE = "/usr/lib/google-cloud-sdk/platform/google_appengine"
+"""Auto-imported at Python startup when this dir is on PYTHONPATH (as
+``session.ensure_workers`` sets it, behind the package root, for Spark's
+Python workers): gives the workers the vendored google.protobuf (the
+driver cannot edit a worker's sys.path, so the shim rides startup)."""
 
 try:
-    import google.protobuf  # noqa: F401
-except ImportError:
-    if os.path.isdir(os.path.join(_GAE, "google", "protobuf")):
-        sys.path.append(_GAE)
+    from bigquery_etl_spark._vendor import enable_vendored_protobuf
 
-try:
-    from google.protobuf import runtime_version as _rv
-
-    if not getattr(_rv, "_bqes_relaxed", False):
-        _orig = _rv.ValidateProtobufRuntimeVersion
-
-        def _lenient(gd, gmaj, gmin, gpat, gsuf, loc):
-            try:
-                _orig(gd, gmaj, gmin, gpat, gsuf, loc)
-            except _rv.VersionError:
-                if not (gmaj == _rv.MAJOR and _rv.MINOR >= gmin - 1):
-                    raise
-
-        _rv.ValidateProtobufRuntimeVersion = _lenient
-        _rv._bqes_relaxed = True
+    enable_vendored_protobuf()
 except Exception:  # noqa: BLE001 — shim must never break startup
     pass

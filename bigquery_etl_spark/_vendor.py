@@ -4,11 +4,12 @@
 protobuf between the Python worker and the JVM state server; this
 container has no ``protobuf`` pip package, but the google-cloud-sdk it
 DOES ship bundles a pure-python ``google.protobuf`` (6.32.0) under the
-appengine platform dir. Putting that on ``sys.path`` (and on
-``PYTHONPATH`` + a ``sitecustomize`` shim dir so Spark's Python WORKERS
-pick it up too — workers are separate processes; a driver-side sys.path
-edit never reaches them) un-gates the TWS runtime tests (VERDICT r3
-item 5).
+appengine platform dir. Putting that on ``sys.path`` makes it
+importable in the driver. Spark's Python workers are separate
+processes, so they get it from ``worker_path()``: the
+``sitecustomize`` shim dir and the appengine dir, which
+``session.ensure_workers`` puts on the session's worker ``PYTHONPATH``
+(at any time, before or after the session starts).
 
 Version skew: pyspark 4.1's generated ``StateMessage_pb2`` declares
 gencode 6.33 and the vendored runtime is 6.32 — one minor behind, which
@@ -26,7 +27,7 @@ import os
 import sys
 
 GAE_DIR = "/usr/lib/google-cloud-sdk/platform/google_appengine"
-_SHIM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_protobuf_shim")
+SHIM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_protobuf_shim")
 
 
 def _relax_runtime_validator() -> None:
@@ -51,10 +52,8 @@ def _relax_runtime_validator() -> None:
 
 
 def enable_vendored_protobuf() -> bool:
-    """Make ``google.protobuf`` importable (driver AND future Spark
-    workers) if at all possible; True when importable afterwards. Call
-    BEFORE creating the SparkSession — workers inherit PYTHONPATH from
-    the JVM's environment at launch."""
+    """Make ``google.protobuf`` importable in this process if at all
+    possible; True when importable afterwards."""
     try:
         import google.protobuf  # noqa: F401
 
@@ -71,12 +70,14 @@ def enable_vendored_protobuf() -> bool:
     except ImportError:
         return False
     _relax_runtime_validator()
-    # workers: sitecustomize in _SHIM_DIR repeats the two steps above at
-    # interpreter startup
-    parts = [_SHIM_DIR, GAE_DIR]
-    existing = os.environ.get("PYTHONPATH", "")
-    for p in [x for x in existing.split(os.pathsep) if x]:
-        if p not in parts:
-            parts.append(p)
-    os.environ["PYTHONPATH"] = os.pathsep.join(parts)
     return True
+
+
+def worker_path() -> list[str]:
+    """``PYTHONPATH`` entries that give a Python worker the vendored
+    ``google.protobuf``: the shim dir, whose ``sitecustomize`` calls
+    ``enable_vendored_protobuf`` at interpreter startup, and the
+    appengine dir. Empty when no vendored copy is in use."""
+    if enable_vendored_protobuf() and GAE_DIR in sys.path:
+        return [SHIM_DIR, GAE_DIR]
+    return []

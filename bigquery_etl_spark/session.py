@@ -13,6 +13,11 @@ import os
 
 from pyspark.sql import SparkSession
 
+from bigquery_etl_spark import _vendor
+
+# the directory holding the ``bigquery_etl_spark`` package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "bigquery-etl-spark",
@@ -29,6 +34,7 @@ def get_spark(
     """
     active = SparkSession.getActiveSession()
     if active is not None:
+        ensure_workers(active)
         return active
 
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -107,4 +113,27 @@ def get_spark(
 
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    ensure_workers(spark)
     return spark
+
+
+def ensure_workers(spark: SparkSession) -> None:
+    """Let this session's Python workers import ``bigquery_etl_spark``
+    (and the vendored ``google.protobuf``) from any working directory.
+    ``get_spark`` calls it; a library user who builds their own session
+    calls it once.
+
+    Writes one ``PYTHONPATH`` into ``sparkContext.environment``: the
+    package root, ``_vendor.worker_path()``, then any entries already
+    there. PySpark ships that dict with every Python function (UDF,
+    ``mapInPandas``, Python DataSource, transformWithState runner), so
+    it works on a session that already runs. Spark keys its Python
+    worker daemon by this environment, so a repeat call leaves the
+    string byte-identical.
+    """
+    env = spark.sparkContext.environment
+    parts = [_PACKAGE_ROOT, *_vendor.worker_path()]
+    for p in env.get("PYTHONPATH", "").split(os.pathsep):
+        if p and p not in parts:
+            parts.append(p)
+    env["PYTHONPATH"] = os.pathsep.join(parts)

@@ -6349,8 +6349,8 @@ def _rewrite_ml_tfidf_over(sql: str) -> str:
     #     joins broadcast at bench scale), so __tfvec's GROUP BY
     #     __toks needs NO new exchange.
     # Measured (sf0.1, bench protocol): see OPTIMIZATION_r13.md and
-    # plans/r13/q_ml_tfidf_after.txt. Oracle-verified identical
-    # (q_ml_tfidf, q_ml_idf at sf0.001 + sf0.01).
+    # `git show 70c0e99:plans/r13/q_ml_tfidf_after.txt`. Oracle-verified
+    # identical (q_ml_tfidf, q_ml_idf at sf0.001 + sf0.01).
     rl_pairs = _ml_bag_of_words_rewriter(["__toks"])
     body = (
         "WITH __tfb AS (SELECT *, ("

@@ -60,10 +60,15 @@ def _load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         #   3. timestamp[us] no tz     — Spark 4 reads TIMESTAMP_NTZ; cast to
         #      TIMESTAMP (under the UTC session tz the wall-clock IS the
         #      instant, so this matches DuckDB's naive reading bit-for-bit)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Case 1 needs the session-global nanosAsLong, which Spark reads
+        # again at execution time, so it cannot be restored after the
+        # load: set it only when the footer shows that encoding.
         from pyspark.sql import functions as F
 
-        df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+        path = f"{sf_dir}/{table}.parquet"
+        if _ts_is_int64_nanos(path):
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        df = spark.read.parquet(path)
         t = df.schema["ts"].dataType.typeName()
         if t == "long":
             # integer div — ns values exceed 2^53, double division would drift
@@ -72,6 +77,18 @@ def _load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
             return df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+
+
+def _ts_is_int64_nanos(path: str) -> bool:
+    """True when ``ts`` in the local parquet file ``path`` is INT64
+    TIMESTAMP(NANOS)."""
+    import pyarrow.parquet as pq
+
+    if not os.path.isfile(path):
+        return False  # a directory or remote path: Spark's reader decides
+    schema = pq.read_metadata(path).schema
+    col = schema.column(schema.names.index("ts"))
+    return col.physical_type == "INT64" and '"nanoseconds"' in col.logical_type.to_json()
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:

@@ -16,12 +16,6 @@ def spark():
 
     import tempfile
 
-    # vendored-protobuf shim (TWS tests): must run BEFORE the JVM
-    # launches so Python workers inherit the PYTHONPATH
-    from bigquery_etl_spark._vendor import enable_vendored_protobuf
-
-    enable_vendored_protobuf()
-
     spark = get_spark(
         app_name="bigquery-etl-spark-tests",
         cpus=os.environ.get("SPARK_GRAFT_TEST_CPUS", "4"),

@@ -2,8 +2,9 @@
 defaults, NOT our session builder), import __spark_entry__, run the
 t1 smoke + full t2 oracle comparison.
 
-Usage: python tests/drive_entry.py   [env SPARK_GRAFT_DRIVE_SF=/root/testdata/sf0.01]
-Exits nonzero on any oracle mismatch.
+Usage: python tests/drive_entry.py [q_name ...]   [env SPARK_GRAFT_DRIVE_SF=<sf dir>, default sf0.01]
+With query names, runs only those (the quick loop for one registry
+entry); an unknown name fails. Exits nonzero on any oracle mismatch.
 
 Set SPARK_GRAFT_DRIVE_JSON=<path> to also write a CORRECTNESS-style
 artifact (per query: rows/schema/hash match + row counts + err) in the
@@ -79,6 +80,9 @@ def _record(spark_pdf, oracle_pdf, errs=None, err=None) -> dict:
 qs, oracles = E.queries(), E.oracle_sql()
 assert set(oracles) <= set(qs), "oracle keys must be subset of query keys"
 fails = []
+if sys.argv[1:]:
+    fails = [(n, ["not in registry"]) for n in sys.argv[1:] if n not in qs]
+    qs = {n: qs[n] for n in sys.argv[1:] if n in qs}
 for name, fn in sorted(qs.items()):
     t0 = time.perf_counter()
     try:
@@ -130,5 +134,5 @@ if JSON_OUT:
     with open(JSON_OUT, "w") as f:
         json.dump(records, f, indent=1)
     print(f"wrote {JSON_OUT} ({len(records)} records)")
-print("RESULT:", "FAIL" if fails else "PASS", f"({len(qs)} queries, {len(oracles)} with oracle)")
+print("RESULT:", "FAIL" if fails else "PASS", f"({len(qs)} queries, {sum(n in oracles for n in qs)} with oracle)")
 sys.exit(1 if fails else 0)

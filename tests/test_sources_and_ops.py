@@ -49,6 +49,35 @@ def test_partitioned_write_prunes(spark, tmp_path):
     assert "PartitionFilters" in plan
 
 
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def test_events_load_leaves_nanos_conf_unset(spark, sf_dir):
+    from bigquery_etl_spark.sources.tables import load
+
+    spark.conf.unset(NANOS_AS_LONG)
+    df = load(spark, sf_dir, "events")
+    assert df.schema["ts"].dataType == T.TimestampType()
+    assert spark.conf.get(NANOS_AS_LONG) == "false"
+
+
+def test_events_load_reads_int64_nanos_ts(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bigquery_etl_spark.sources.tables import load
+
+    ns = [1_700_000_000_123_456_789, 1_600_000_000_000_001_999]
+    pq.write_table(
+        pa.table({"event_id": [1, 2], "ts": pa.array(ns, pa.timestamp("ns"))}),
+        str(tmp_path / "events.parquet"),
+    )
+    df = load(spark, str(tmp_path), "events")
+    assert df.schema["ts"].dataType == T.TimestampType()
+    got = [r[0] for r in df.orderBy("event_id").select(F.unix_micros("ts")).collect()]
+    assert got == [n // 1000 for n in ns]
+
+
 def test_block_range_source_chunks_and_rows(spark, tmp_path):
     # the fetcher runs in Python workers: record its calls in a file
     log = tmp_path / "calls.txt"
