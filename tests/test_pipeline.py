@@ -9,6 +9,8 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -31,7 +33,7 @@ from bigquery_etl_spark.pipeline.schemas import (
     ETL_CURSOR_SCHEMA,
     MARKETPLACE_LISTINGS_SCHEMA,
 )
-from bigquery_etl_spark.pipeline.sinks import merge_append
+from bigquery_etl_spark.pipeline.sinks import _data_files, merge_append
 from bigquery_etl_spark.pipeline.stats_server import StatsServer
 
 
@@ -255,6 +257,179 @@ def test_merge_append_partly_overlapping_batch(spark, tmp_path):
     assert merge_append(spark, batch(10), path, keys) == 0  # full replay
     assert parquet_files() == files  # A11: nothing written
     assert spark.read.parquet(path).count() == 10
+
+
+KEYS = ["block_number", "log_index"]
+
+
+def _batch(spark, lo, hi):
+    """Blocks lo..hi, log_index = block % 2, in the merge tests' columns."""
+    return spark.range(lo, hi + 1).select(
+        F.col("id").alias("block_number"),
+        (F.col("id") % 2).alias("log_index"),
+        F.concat(F.lit("v"), F.col("id").cast("string")).alias("payload"),
+    )
+
+
+def _write_rows(file, rows, **kwargs):
+    """A parquet file written outside Spark, holding (block, log_index) rows."""
+    os.makedirs(os.path.dirname(file), exist_ok=True)
+    pq.write_table(
+        pa.table({
+            "block_number": pa.array([b for b, _ in rows], pa.int64()),
+            "log_index": pa.array([i for _, i in rows], pa.int64()),
+            "payload": [f"old{b}" for b, _ in rows],
+        }),
+        file, **kwargs,
+    )
+
+
+def _parquet_files(path):
+    return sorted(os.path.join(r, f) for r, _, fs in os.walk(path) for f in fs if f.endswith(".parquet"))
+
+
+def test_merge_append_filters_probe_to_block_range(spark, tmp_path):
+    """One warehouse file holds (10, 0) inside the range and (1, 0), the same
+    log_index, outside it: the file is probed, only the in-range key collides."""
+    path = str(tmp_path / "t")
+    _write_rows(f"{path}/part-0.parquet", [(1, 0), (10, 0)])
+    probed = []
+    batch = spark.createDataFrame(
+        [(10, 0, "a"), (10, 1, "b"), (11, 0, "c"), (12, 0, "d")],
+        "block_number long, log_index long, payload string",
+    )
+    assert merge_append(spark, batch, path, KEYS, block_range=(10, 12), probed=probed) == 3
+    assert probed == [f"{path}/part-0.parquet"]
+    assert sorted(map(tuple, spark.read.parquet(path).select(*KEYS).collect())) == [
+        (1, 0), (10, 0), (10, 1), (11, 0), (12, 0),
+    ]
+
+
+def test_merge_append_range_replay_appends_nothing(spark, tmp_path):
+    path = str(tmp_path / "t")
+    assert merge_append(spark, _batch(spark, 0, 9), path, KEYS, block_range=(0, 9)) == 10
+    first = _parquet_files(path)
+    assert merge_append(spark, _batch(spark, 10, 19), path, KEYS, block_range=(10, 19)) == 10
+    files = _parquet_files(path)
+    probed = []
+    assert merge_append(spark, _batch(spark, 10, 19), path, KEYS, block_range=(10, 19), probed=probed) == 0
+    assert _parquet_files(path) == files  # A11: nothing written
+    assert sorted(probed) == sorted(set(files) - set(first))  # only the second merge's files
+    assert spark.read.parquet(path).count() == 20
+
+
+@pytest.mark.parametrize("leftover", [
+    "_temporary/0/part-00000.parquet",
+    "_temporary/0/task_202610180000_0001_m_000000/part-00000.parquet",  # committed task
+    "_temporary/0/_temporary/attempt_202610180000_0001_m_000000_0/part-00000.parquet",
+])
+def test_merge_append_ignores_crashed_writer_files(spark, tmp_path, leftover):
+    """A crashed writer's ``_temporary/`` part file holding the batch's keys is
+    not table data (Spark does not read it): it must neither suppress the
+    append nor be published by the append's job commit."""
+    path = str(tmp_path / "t")
+    _write_rows(f"{path}/{leftover}", [(b, b % 2) for b in range(10, 15)])
+    probed = []
+    assert merge_append(spark, _batch(spark, 10, 14), path, KEYS, block_range=(10, 14), probed=probed) == 5
+    assert probed == []
+    table = spark.read.parquet(path)
+    assert table.count() == 5
+    assert sorted(r.payload for r in table.collect()) == [f"v{b}" for b in range(10, 15)]
+
+
+def test_merge_append_probes_file_without_statistics(spark, tmp_path):
+    """A file whose footer has no block_number min/max may hold any block."""
+    path = str(tmp_path / "t")
+    _write_rows(f"{path}/part-0.parquet", [(10, 0), (11, 1)], write_statistics=False)
+    assert merge_append(spark, _batch(spark, 10, 13), path, KEYS, block_range=(10, 13)) == 2
+    assert spark.read.parquet(path).select(*KEYS).distinct().count() == 4
+
+
+def test_merge_of_new_range_runs_only_count_and_write_jobs(spark, tmp_path):
+    """A range the warehouse has never seen runs no key scan, broadcast or
+    checkpoint: the merge starts exactly the Spark jobs of counting and
+    writing the batch (a probe would add its broadcast and checkpoint jobs)."""
+    path = str(tmp_path / "t")
+    assert merge_append(spark, _batch(spark, 0, 9), path, KEYS, block_range=(0, 9)) == 10
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setJobGroup("", "")
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    batch = _batch(spark, 10, 19)
+    plain = jobs("count-and-write", lambda: (batch.count(), batch.write.parquet(str(tmp_path / "u"))))
+    probed = []
+    merged = jobs(
+        "merge-new-range",
+        lambda: merge_append(spark, batch, path, KEYS, block_range=(10, 19), probed=probed),
+    )
+    assert probed == []
+    assert merged == plain
+    assert spark.read.parquet(path).count() == 20
+
+
+@pytest.fixture(scope="module")
+def tick_payloads(spark, tmp_path_factory):
+    """Stats payloads of: a tick into an empty warehouse, an idle tick, a tick
+    of a new range into the non-empty warehouse, and a full replay of both
+    ranges (fresh cursor, same warehouse); plus the warehouse's data files."""
+    tmp = tmp_path_factory.mktemp("stages")
+    raw = make_raw_logs(spark, START_BLOCK, START_BLOCK + 19)
+    docs = make_ipfs_docs(spark, raw)
+
+    def runner(cursor, heads):
+        return EtlBatchRunner(
+            spark,
+            raw_logs_source=lambda lo, hi: raw.filter(F.col("block_number").between(lo, hi)),
+            ipfs_docs=docs,
+            head_fn=lambda: next(heads),
+            warehouse_dir=str(tmp / "w"),
+            staging_dir=str(tmp / "s"),
+            cursor=CursorStore(spark, str(tmp / cursor), start_block=START_BLOCK - 1),
+            batch_size=10,
+        )
+
+    lag = 4
+    r1 = runner("c1", iter([START_BLOCK + 9 + lag] * 2 + [START_BLOCK + 19 + lag]))
+    out = {}
+    for name, loaded in (("empty", True), ("idle", False), ("new_range", True)):
+        assert r1.run_once() is loaded, r1.stats.last_error
+        out[name] = StatsServer(r1).payload()
+    r2 = runner("c2", iter([START_BLOCK + 19 + lag]))
+    assert r2.run_once() is True
+    out["replay"] = StatsServer(r2).payload()
+    assert out["replay"]["num_marketplace_rows"] == 0
+    out["files"] = _data_files(str(tmp / "w"))
+    return out
+
+
+@pytest.mark.parametrize("stage", ["fetch_enrich_s", "staging_s", "merge_s"])
+def test_stats_range_stage_seconds(tick_payloads, stage):
+    """Each range stage is timed on a loading tick and reset by an idle one."""
+    assert tick_payloads["empty"][stage] > 0
+    assert tick_payloads["new_range"][stage] > 0
+    assert tick_payloads["idle"][stage] == 0
+
+
+def test_stats_cursor_s(tick_payloads):
+    """The cursor read runs on every tick, the commit only on a loading one."""
+    assert tick_payloads["idle"]["cursor_s"] > 0
+    assert tick_payloads["new_range"]["cursor_s"] > 0
+
+
+def test_stats_files_probed(tick_payloads):
+    """A range new to the warehouse probes no file, even with the warehouse
+    non-empty; replaying both ranges probes each warehouse file that holds
+    rows once (an empty part file has no row group and no key)."""
+    assert tick_payloads["empty"]["files_probed"] == 0
+    assert tick_payloads["new_range"]["files_probed"] == 0
+    holding_rows = [f for f in tick_payloads["files"] if pq.read_metadata(f).num_row_groups]
+    assert tick_payloads["replay"]["files_probed"] == len(holding_rows) > 0
 
 
 def _idle_runner(spark, tmp_path, head_fn):

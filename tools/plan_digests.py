@@ -9,6 +9,13 @@ plan. A fresh interpreter building the headline plans in a FIXED order
 makes the digests reproducible; tests/test_plan_snapshots.py shells out
 to this tool for both generation and verification.
 
+It also pins numpy's OpenBLAS kernel on AVX2 hosts: OpenBLAS picks a
+kernel per CPU when it loads, and q_ml_logreg's plan embeds the
+coefficients of an IRLS fit whose 3x3 Newton solves run in it. On an
+AVX-512 host the default SkylakeX kernel moves their last bits (intercept
+24.26132117064254 vs 24.261321170639786 with the Haswell or Prescott
+kernel, which the snapshots match), and so the digest.
+
 Usage: python tools/plan_digests.py [sf_dir]   # prints one JSON object
 """
 
@@ -47,8 +54,20 @@ def digest(df) -> str:
     return hashlib.sha256(canonical_plan(df).encode()).hexdigest()[:16]
 
 
+def _pin_blas_kernel() -> None:
+    """Before numpy loads: the Haswell kernel wherever the CPU can run it."""
+    try:
+        with open("/proc/cpuinfo") as f:
+            avx2 = " avx2 " in f.read()
+    except OSError:
+        avx2 = False
+    if avx2:
+        os.environ.setdefault("OPENBLAS_CORETYPE", "Haswell")
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    _pin_blas_kernel()
 
     import importlib.util
 
