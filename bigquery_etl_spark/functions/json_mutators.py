@@ -17,7 +17,20 @@ The dialect lowers the BigQuery calls onto session-registered UDFs
 ``to_json(named_struct('v', value))`` so the scalar's TYPE survives the
 string boundary exactly (a NULL value arrives as the empty struct —
 Spark's to_json drops null fields — and decodes to JSON null, matching
-BigQuery)."""
+BigQuery).
+
+Cost: each mutator call parses and serializes its doc once, and a
+multi-path JSON_REMOVE is one call. The calls of one SELECT share one
+ArrowEvalPython node, so q_json_mutators (five calls per doc) pays five
+parse/serialize round-trips per doc and one Arrow transfer. What made
+that query slow was not the round-trips but running them twice: its
+global ``ORDER BY k`` put the range exchange directly over the UDFs,
+and Spark's range partitioner runs the exchange's child once to sample
+and again to shuffle. ``LakeCatalog.bq_sql`` now sorts below such a
+projection (``lake_sql._sort_below_python_udfs``); the benchmark's
+``queries`` workload (sf0.1, 4 cores, medians of 10 runs) measured
+the query at 4.4 s with the UDFs under the exchange and 1.2 s with
+them above the sort."""
 
 from __future__ import annotations
 
@@ -101,35 +114,39 @@ def json_set_one(doc: str | None, path: str, val) -> str | None:
     return _dumps(root)
 
 
-def json_remove_one(doc: str | None, path: str) -> str | None:
-    """BigQuery JSON_REMOVE for one path: removes the key/element;
-    nonexistent paths are no-ops; removing '$' is an error."""
+def json_remove(doc: str | None, *paths: str) -> str | None:
+    """BigQuery JSON_REMOVE: removes each path's key/element in order,
+    on one parse of the doc; nonexistent paths are no-ops; removing '$'
+    is an error."""
     if doc is None:
         return None
-    steps = parse_path(path)
-    if not steps:
+    steps_list = [parse_path(p) for p in paths]
+    if not all(steps_list):
         raise ValueError("JSON_REMOVE cannot remove the document root $")
     try:
         root = json.loads(doc)
     except ValueError:
         return None
+    for steps in steps_list:
+        _remove_at(root, steps)
+    return _dumps(root)
+
+
+def _remove_at(root, steps: list) -> None:
     cur = root
     for step in steps[:-1]:
         if isinstance(step, str):
             if not isinstance(cur, dict) or step not in cur:
-                return _dumps(root)
-            cur = cur[step]
-        else:
-            if not isinstance(cur, list) or step >= len(cur):
-                return _dumps(root)
-            cur = cur[step]
+                return
+        elif not isinstance(cur, list) or step >= len(cur):
+            return
+        cur = cur[step]
     last = steps[-1]
     if isinstance(last, str):
         if isinstance(cur, dict):
             cur.pop(last, None)
     elif isinstance(cur, list) and last < len(cur):
         del cur[last]
-    return _dumps(root)
 
 
 def _strip(obj, include_arrays: bool):
@@ -182,13 +199,11 @@ def register_json_mutators(spark: SparkSession) -> None:
 
     @F.pandas_udf("string")
     def __bq_json_remove(doc: pd.Series, paths: pd.Series) -> pd.Series:
-        def one(d, ps):
-            for p in (ps or "").split("\x00"):
-                if p:
-                    d = json_remove_one(d, p)
-            return d
-
-        return pd.Series([one(d, ps) for d, ps in zip(doc, paths)])
+        # the dialect NUL-joins a call's paths (one UDF call per remove)
+        return pd.Series([
+            json_remove(d, *(p for p in (ps or "").split("\x00") if p))
+            for d, ps in zip(doc, paths)
+        ])
 
     @F.pandas_udf("string")
     def __bq_json_strip_nulls(doc: pd.Series) -> pd.Series:

@@ -1139,17 +1139,23 @@ def _json_set_rewriter(args: list[str]) -> str:
 
 
 def _json_remove_rewriter(args: list[str]) -> str:
+    """``JSON_REMOVE(j, path [, path …])`` → ONE mutator UDF call whose
+    paths arrive NUL-joined in the given order, so a multi-path remove
+    parses each doc once and plans no second ArrowEvalPython node."""
     if len(args) < 2:
         raise BQDialectError(f"JSON_REMOVE expects (json, path …), got {args}")
-    out = args[0].strip()
+    paths = []
     for p in args[1:]:
         lp = _literal_path(p, "JSON_REMOVE")
         if lp.strip("' ").strip() == "$":
             raise BQDialectError(
                 "JSON_REMOVE cannot remove the document root $"
             )
-        out = f"__bq_json_remove({out}, {lp})"
-    return out
+        paths.append(lp)
+    return (
+        f"__bq_json_remove({args[0].strip()}, "
+        f"CONCAT_WS(CHR(0), {', '.join(paths)}))"
+    )
 
 
 def _json_strip_nulls_rewriter(args: list[str]) -> str:

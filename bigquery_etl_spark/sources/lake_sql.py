@@ -54,6 +54,7 @@ manifest min/max stats) is the same refinement documented on
 
 from __future__ import annotations
 
+import importlib
 import re
 from dataclasses import dataclass, field
 
@@ -635,6 +636,67 @@ def merge_dataframes(
 # r13: per-SparkSession record of already-executed TEMP FUNCTION DDL
 # texts (bq_sql skips byte-identical re-registrations — see bq_sql)
 _TMP_FN_DDL_DONE: dict[int, set[str]] = {}
+
+# Python-UDF packs the dialect lowers onto: (marker in the translated
+# text, module under bigquery_etl_spark.functions, register function).
+# bq_sql registers a pack on the session the first time its marker
+# shows up.
+_PY_UDF_PACKS = (
+    ("__bq_json_", "json_mutators", "register_json_mutators"),
+    ("__bq_net_", "net_funcs", "register_net_funcs"),
+    ("__bq_b32_", "base32", "register_base32"),
+    ("__bq_daead_", "daead", "register_daead"),
+    ("__bq_fmt_f", "cfmt", "register_cfmt"),
+    ("__bq_farm_", "farmhash", "register_farmhash"),
+    ("__bq_uni_", "unicode_funcs", "register_unicode_funcs"),
+)
+
+
+def _sort_below_python_udfs(df):
+    """Place a global ORDER BY under the Python-UDF projection it sorts.
+
+    Spark's range exchange samples its input by running the child
+    plan, so for ``Sort(order, global, Project(udfs, child))`` every
+    Python UDF runs twice: once for the sample job, once more in the
+    shuffle map stage. When the sort keys pass through from ``child``
+    (``Sort.references`` within ``child.outputSet``), the Project is
+    deterministic and one of its expressions holds a Python UDF, the
+    top of the analyzed plan (under a ``WithCTE``, its main plan) is
+    rebuilt as ``Project(udfs, Sort(order, global, child))``: the
+    sample and the shuffle carry only the child's columns and the UDFs
+    run once per row, after the shuffle. A Project keeps its rows in
+    order, so rows, order and schema are unchanged. Every other shape
+    (a sort key computed in the same SELECT, a sort over a UDF output,
+    ``ORDER BY … LIMIT``) and any non-DataFrame result come back as
+    they are. Only the top spine is looked at: one py4j call per
+    project-list entry, none per expression node."""
+    if not isinstance(df, DataFrame):
+        return df
+    plan = df._jdf.queryExecution().analyzed()
+    cte = plan.nodeName() == "WithCTE"
+    sort = plan.plan() if cte else plan
+    if sort.nodeName() != "Sort" or not getattr(sort, "global")():
+        return df
+    proj = sort.child()
+    if proj.nodeName() != "Project" or not proj.deterministic():
+        return df
+    child = proj.child()
+    if not sort.references().subsetOf(child.outputSet()):
+        return df
+    jvm = df.sparkSession._jvm
+    udf = jvm.org.apache.spark.sql.catalyst.trees.TreePattern.PYTHON_UDF()
+    exprs = proj.projectList()
+    if not any(exprs.apply(i).containsPattern(udf) for i in range(exprs.size())):
+        return df
+    seq = jvm.PythonUtils.toSeq
+    top = proj.withNewChildren(seq([sort.withNewChildren(seq([child]))]))
+    if cte:
+        top = plan.withNewPlan(top)
+    jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        df.sparkSession._jsparkSession, top
+    )
+    return DataFrame(jdf, df.sparkSession)
+
 
 _VERSION_RX = re.compile(
     r"\b([\w.]+)\s+VERSION\s+AS\s+OF\s+(\d+)", re.IGNORECASE
@@ -2382,7 +2444,12 @@ class LakeCatalog:
         ``params`` binds BigQuery named query parameters (``@name``):
         values render as SQL literals, literal-aware (a ``@name``
         inside a string stays text) — the client-library parameterized
-        query surface. Missing parameters refuse loudly."""
+        query surface. Missing parameters refuse loudly.
+
+        A statement that calls Python UDFs registers their packs on the
+        session, and its DataFrame goes through
+        ``_sort_below_python_udfs`` so a global ORDER BY does not run
+        the UDFs twice."""
         from bigquery_etl_spark.sources.bq_dialect import translate
 
         if params:
@@ -2405,45 +2472,13 @@ class LakeCatalog:
 
             text = _map_literal_aware(text, _seg)
         out = translate(text)
-        if "__bq_json_" in out:
-            # JSON mutators lower onto session-registered Arrow UDFs
-            from bigquery_etl_spark.functions.json_mutators import (
-                register_json_mutators,
-            )
-
-            register_json_mutators(self.spark)
-        if "__bq_net_" in out:
-            from bigquery_etl_spark.functions.net_funcs import (
-                register_net_funcs,
-            )
-
-            register_net_funcs(self.spark)
-        if "__bq_b32_" in out:
-            from bigquery_etl_spark.functions.base32 import (
-                register_base32,
-            )
-
-            register_base32(self.spark)
-        if "__bq_daead_" in out:
-            from bigquery_etl_spark.functions.daead import register_daead
-
-            register_daead(self.spark)
-        if "__bq_fmt_f" in out:
-            from bigquery_etl_spark.functions.cfmt import register_cfmt
-
-            register_cfmt(self.spark)
-        if "__bq_farm_" in out:
-            from bigquery_etl_spark.functions.farmhash import (
-                register_farmhash,
-            )
-
-            register_farmhash(self.spark)
-        if "__bq_uni_" in out:
-            from bigquery_etl_spark.functions.unicode_funcs import (
-                register_unicode_funcs,
-            )
-
-            register_unicode_funcs(self.spark)
+        packs = [p for p in _PY_UDF_PACKS if p[0] in out]
+        for _, module, register in packs:
+            getattr(
+                importlib.import_module(f"bigquery_etl_spark.functions.{module}"),
+                register,
+            )(self.spark)
+        py_udfs = bool(packs)
         if "DECIMAL(38,19)" in out:
             # BIGNUMERIC contract (r11, closing VERDICT r10 item 6 —
             # PERMANENT): statements touching the DECIMAL(38,19)
@@ -2462,7 +2497,8 @@ class LakeCatalog:
             prev = self.spark.conf.get(key)
             self.spark.conf.set(key, "false")
             try:
-                return self.sql(out)
+                res = self.sql(out)
+                return _sort_below_python_udfs(res) if py_udfs else res
             finally:
                 self.spark.conf.set(key, prev)
         # r13 (bench floor): a CREATE OR REPLACE TEMPORARY FUNCTION
@@ -2482,7 +2518,8 @@ class LakeCatalog:
             res = self.sql(out)
             done.add(out)
             return res
-        return self.sql(out)
+        res = self.sql(out)
+        return _sort_below_python_udfs(res) if py_udfs else res
 
     def script(self, text: str):
         """Execute a BigQuery procedural script (DECLARE/SET, IF/WHILE/

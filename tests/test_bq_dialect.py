@@ -855,6 +855,28 @@ def test_json_mutators_r8(fcat):
         translate("SELECT JSON_REMOVE(j, '$')")
 
 
+
+def test_json_remove_paths_are_one_call(fcat):
+    """A multi-path JSON_REMOVE is one UDF call with its paths in the
+    given order, equal to removing them one after another."""
+    from bigquery_etl_spark.sources.bq_dialect import translate
+
+    out = translate("SELECT JSON_REMOVE(j, '$.b[0]', '$.a') FROM t")
+    assert out.count("__bq_json_remove(") == 1
+    fcat.spark.createDataFrame(
+        [('{"a": 1, "b": [1, 2, 3], "c": {"d": null}}',),
+         ('{"b": 1}',), ('[0, {"a": 2}]',), ("not json",), (None,)],
+        "j string",
+    ).createOrReplaceTempView("jr_docs")
+    rows = fcat.bq_sql(
+        "SELECT JSON_REMOVE(j, '$.b[0]', '$.b[0]', '$.c.d', '$[1].a') "
+        "AS one, JSON_REMOVE(JSON_REMOVE(JSON_REMOVE(JSON_REMOVE(j, "
+        "'$.b[0]'), '$.b[0]'), '$.c.d'), '$[1].a') AS seq FROM jr_docs"
+    ).collect()
+    assert [r.one for r in rows] == [r.seq for r in rows]
+    assert rows[0].one == '{"a":1,"b":[3],"c":{}}'
+    assert rows[2].one == '[0,{}]' and rows[4].one is None
+
 def test_gis_area_perimeter_centroid_r8(fcat):
     import math
 

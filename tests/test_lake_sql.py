@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -619,3 +621,62 @@ def test_row_access_policies_r10(spark, tmp_path):
         "SELECT SESSION_USER() AS u, 'SESSION_USER()' AS s"
     ).collect()[0]
     assert row.u == "alice@x" and row.s == "SESSION_USER()"
+
+
+_SORT_SHAPES = {
+    # pass-through sort keys: the UDFs move above the sort
+    "cte": """
+        WITH j AS (SELECT k, g, doc FROM sd_docs)
+        SELECT k, JSON_STRIP_NULLS(doc) AS s, JSON_SET(doc, '$.k', k) AS t
+        FROM j ORDER BY k""",
+    "from": """
+        SELECT k, JSON_REMOVE(doc, '$.a', '$.b[0]') AS r
+        FROM sd_docs ORDER BY k""",
+    "desc_nulls_last": """
+        SELECT g, k, JSON_STRIP_NULLS(doc) AS s
+        FROM sd_docs ORDER BY g DESC, k ASC NULLS LAST""",
+    # the sort reads what the projection computes, or is a top-k
+    "udf_key": """
+        SELECT k, JSON_SET(doc, '$.k', k) AS t FROM sd_docs ORDER BY t""",
+    "computed_alias": """
+        SELECT -k AS nk, JSON_STRIP_NULLS(doc) AS s
+        FROM sd_docs ORDER BY nk""",
+    "limit": """
+        SELECT k, JSON_STRIP_NULLS(doc) AS s FROM sd_docs
+        ORDER BY k LIMIT 5""",
+}
+
+
+def _canon(df) -> str:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return re.sub(r"#\d+L?", "#", plan)
+
+
+@pytest.mark.parametrize("shape", sorted(_SORT_SHAPES))
+def test_bq_sql_sorts_below_python_udf_projection(spark, shape):
+    """bq_sql places a global ORDER BY under a Python-UDF projection
+    when the sort keys pass through it (the range exchange's sample job
+    would otherwise run the UDFs a second time). The result is exactly
+    the translated statement's: same rows, same order, same schema;
+    the shapes the rewrite must not touch keep their plan."""
+    from bigquery_etl_spark.sources.bq_dialect import translate
+
+    rows = [
+        (k, k % 3 if k % 7 else None,
+         None if k % 11 == 0 else
+         f'{{"a": {k}, "b": [{k}, null, 2], "c": {{"d": null}}}}')
+        for k in range(40)
+    ] + [(None, 1, '{"a": null}')]
+    spark.createDataFrame(rows, "k long, g long, doc string") \
+        .repartition(3).createOrReplaceTempView("sd_docs")
+    text = _SORT_SHAPES[shape]
+    got = LakeCatalog(spark).bq_sql(text)
+    want = spark.sql(translate(text))
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    moved = shape in ("cte", "from", "desc_nulls_last")
+    assert (_canon(got) != _canon(want)) == moved
+    if moved:
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        plan = plan.split("== Initial Plan ==")[-1]
+        assert "EvalPython" not in plan[plan.index("rangepartitioning"):]

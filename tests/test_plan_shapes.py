@@ -402,3 +402,14 @@ def test_ml_tfidf_vocabulary_index_distributed(spark, sf_dir):
         first = head.split(",", 1)[0]
         assert " ASC" not in first and " DESC" not in first, line
     assert plan.count("SinglePartition") <= 1, plan
+
+
+def test_json_mutators_run_after_the_range_shuffle(spark, sf_dir):
+    """q_json_mutators ends in a global ORDER BY k over five mutator
+    UDF calls. bq_sql sorts below the UDF projection, so the range
+    exchange's sample job and shuffle carry only the cheap columns and
+    no Python UDF runs under the exchange; the multi-path JSON_REMOVE
+    is one call, so all five share one ArrowEvalPython node."""
+    plan = _executed_plan(QUERIES["q_json_mutators"].fn(spark, sf_dir))
+    assert "EvalPython" not in plan[plan.index("rangepartitioning"):], plan
+    assert plan.count("ArrowEvalPython") == 1, plan

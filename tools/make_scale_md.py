@@ -35,7 +35,7 @@ SLOW_NOTES = {
     "q_embed_ann_ivf": "trains IVF centroids per invocation (4 Lloyd scans) + exact-recall comparison branch",
     "q_iceberg_interop": "one-time scratch fixture build dominates (coalesce(1) rewrite of the 10-copy union into an Iceberg layout); the READ itself is one pruned parquet scan",
     "q_json_query": "builds + extracts 10 JSON columns per doc over the 10x corpus; pure codegen, scales linearly",
-    "q_json_mutators": "Arrow-batched mutator UDFs: 5 json-parse/serialize round-trips per doc by design (the sanctioned fallback tier)",
+    "q_json_mutators": "Arrow-batched mutator UDFs (the sanctioned fallback tier): one ArrowEvalPython node, 5 json-parse/serialize round-trips per doc, run once per row after the ORDER BY's range shuffle (bq_sql sorts below the UDF projection; with the UDFs under the range exchange its sample job re-ran them: 4.4 s vs 1.2 s at sf0.1)",
     "q_upsert": "includes one-time versioned-table build + SQL MERGE commit of 1M rows",
     "q_time_travel": "includes one-time 3-version history build via SQL MERGE",
     "q_merge_delete": "includes one-time versioned-table build + 3-clause MERGE commit",
