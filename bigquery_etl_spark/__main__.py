@@ -131,7 +131,8 @@ def cmd_profile(args: argparse.Namespace) -> int:
               f"{layers['planning_s']:.3f} + execution {layers['execution_s']:.3f}")
         print(f"  jobs {layers['jobs']}  stages {layers['stages']}  tasks "
               f"{layers['tasks']}  shuffle {layers['shuffle_bytes']:,} B  "
-              f"spill {layers['spill_bytes']:,} B  rows {layers['rows']}")
+              f"spill {layers['spill_bytes']:,} B  rows {layers['rows']}  "
+              f"codegen compiles {layers['codegen_compiles']}")
         for op in layers["top_operators"]:
             print(f"  {op['time_s']:8.3f}s  {op['name']} #{op['id']}  rows {op['rows']}")
     return 0

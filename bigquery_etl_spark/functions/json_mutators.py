@@ -15,18 +15,17 @@ bq_dialect.
 The dialect lowers the BigQuery calls onto session-registered UDFs
 (``register_json_mutators``); values arrive JSON-encoded through
 ``to_json(named_struct('v', value))`` so the scalar's TYPE survives the
-string boundary exactly (a NULL value arrives as the empty struct —
-Spark's to_json drops null fields — and decodes to JSON null, matching
-BigQuery).
+string boundary exactly (a NULL value is a field Spark's to_json
+drops, and decodes to JSON null, matching BigQuery).
 
 Cost: each mutator call parses and serializes its doc once, and a
-multi-path JSON_REMOVE is one call. The calls of one SELECT share one
-ArrowEvalPython node, so q_json_mutators (five calls per doc) pays five
-parse/serialize round-trips per doc and one Arrow transfer. What made
-that query slow was not the round-trips but running them twice: its
-global ``ORDER BY k`` put the range exchange directly over the UDFs,
-and Spark's range partitioner runs the exchange's child once to sample
-and again to shuffle. ``LakeCatalog.bq_sql`` now sorts below such a
+multi-path JSON_REMOVE or multi-pair JSON_SET is one call. The calls
+of one SELECT share one ArrowEvalPython node, so q_json_mutators
+(five calls per doc) pays five parse/serialize round-trips per doc
+and one Arrow transfer. What made that query slow was not the
+round-trips but running them twice: its global ``ORDER BY k`` put the
+range exchange directly over the UDFs, and Spark's range partitioner
+runs the exchange's child once to sample and again to shuffle. ``LakeCatalog.bq_sql`` now sorts below such a
 projection (``lake_sql._sort_below_python_udfs``); the benchmark's
 ``queries`` workload (sf0.1, 4 cores, medians of 10 runs) measured
 the query at 4.4 s with the UDFs under the exchange and 1.2 s with
@@ -71,27 +70,35 @@ def _dumps(obj) -> str:
     return json.dumps(obj, separators=(",", ":"), ensure_ascii=False)
 
 
-def json_set_one(doc: str | None, path: str, val) -> str | None:
-    """BigQuery JSON_SET for one (path, value) pair: sets/creates the
-    location (missing object keys are created; short arrays pad with
-    nulls); a path whose EXISTING prefix has the wrong container type
-    is ignored (BigQuery's rule — the doc returns unchanged)."""
+def json_set(doc: str | None, pairs) -> str | None:
+    """BigQuery JSON_SET: applies each (path, value) pair in order on one
+    parse of the doc. A pair sets/creates its location (missing object
+    keys are created; short arrays pad with nulls); a pair whose
+    EXISTING prefix has the wrong container type is ignored (BigQuery's
+    rule — the doc stays as the earlier pairs left it)."""
     if doc is None:
         return None
     try:
         root = json.loads(doc)
     except ValueError:
         return None
-    steps = parse_path(path)
+    for path, val in pairs:
+        root = _set_at(root, parse_path(path), val)
+    return _dumps(root)
+
+
+def _set_at(root, steps: list, val):
+    """``root`` with ``val`` set at ``steps``; ``root`` itself on a
+    container-type mismatch, ``val`` for the root path ``$``."""
     if not steps:
-        return _dumps(val)
+        return val
     cur = root
     for i, step in enumerate(steps):
         last = i == len(steps) - 1
         nxt = steps[i + 1] if not last else None
         if isinstance(step, str):
             if not isinstance(cur, dict):
-                return _dumps(root)  # type mismatch: ignored
+                return root  # type mismatch: ignored
             if last:
                 cur[step] = val
             else:
@@ -102,7 +109,7 @@ def json_set_one(doc: str | None, path: str, val) -> str | None:
                 cur = cur[step]
         else:
             if not isinstance(cur, list):
-                return _dumps(root)
+                return root
             while len(cur) <= step:
                 cur.append(None)
             if last:
@@ -111,7 +118,7 @@ def json_set_one(doc: str | None, path: str, val) -> str | None:
                 if not isinstance(cur[step], (dict, list)):
                     cur[step] = [] if isinstance(nxt, int) else {}
                 cur = cur[step]
-    return _dumps(root)
+    return root
 
 
 def json_remove(doc: str | None, *paths: str) -> str | None:
@@ -188,14 +195,19 @@ def register_json_mutators(spark: SparkSession) -> None:
     from pyspark.sql import functions as F
 
     @F.pandas_udf("string")
-    def __bq_json_set(doc: pd.Series, path: pd.Series,
-                      val: pd.Series) -> pd.Series:
-        def one(d, p, v):
-            decoded = json.loads(v).get("v") if v is not None else None
-            return json_set_one(d, p, decoded)
+    def __bq_json_set(doc: pd.Series, paths: pd.Series,
+                      vals: pd.Series) -> pd.Series:
+        # the dialect NUL-joins a call's paths and names its values
+        # 'v', 'v1', 'v2', … in one struct (one UDF call per JSON_SET)
+        def one(d, ps, vs):
+            decoded = json.loads(vs) if vs is not None else {}
+            return json_set(d, [
+                (p, decoded.get(f"v{i or ''}"))
+                for i, p in enumerate(ps.split("\x00"))
+            ])
 
-        return pd.Series([one(d, p, v)
-                          for d, p, v in zip(doc, path, val)])
+        return pd.Series([one(d, ps, vs)
+                          for d, ps, vs in zip(doc, paths, vals)])
 
     @F.pandas_udf("string")
     def __bq_json_remove(doc: pd.Series, paths: pd.Series) -> pd.Series:

@@ -14,7 +14,10 @@ the best run's own execution:
 - execution as the wall minus build and those phases;
 - jobs, stages, tasks, shuffle-write and spill bytes, and per-operator
   SQL metrics from the session's status stores (readable with the UI
-  disabled).
+  disabled);
+- ``codegen_compiles``, the generated classes Janino compiled during
+  the run (a miss in Spark's JVM-wide compiled-class cache): 0 when
+  every class of the plan was still cached.
 
 Nothing but ``spec.fn`` and ``save()`` runs between timer start and stop;
 the query name is the job description, so the execution and its jobs
@@ -33,6 +36,7 @@ LAYER_KEYS = (
     "wall_s", "build_s", "analysis_s", "optimization_s", "planning_s",
     "execution_s", "jobs", "stages", "tasks", "shuffle_bytes", "spill_bytes",
     "peak_mem_bytes", "rows", "top_operators", "execution_id",
+    "codegen_compiles",
 )
 TOP_OPERATORS = 5
 # Plan nodes that pass their child's rows through unchanged: the output
@@ -104,8 +108,12 @@ def warm_up(spark, specs, sf_dir: str = WARM_DIR) -> dict[str, str]:
     ``{name: error}`` for the specs that failed.
 
     Whole-stage codegen compilation (Janino) costs 0.5-2s per complex
-    plan and is a once-per-query-shape cost — at production scale it is
-    noise, but at bench scale it would dominate (measured:
+    plan. It is paid once per query shape only while the plan's classes
+    stay in Spark's compiled-class cache: ``get_spark`` sizes that cache
+    at 1024 classes, where Spark's default of 100 is evicted within one
+    pass over a few plans (``Profiler`` reports the
+    compiles of each timed run). At production scale it is noise, but
+    at bench scale it would dominate (measured:
     q_dedup_minhash 3.2s cold vs 1.1s warm for the identical plan).
     Timing warm plans measures the engine's execution, which is what
     scales with data. Errors are isolated per query: one broken query
@@ -218,11 +226,13 @@ class Profiler:
         sc = self.spark.sparkContext
         jsc = sc._jsc.sc()
         sql_store = self.spark._jsparkSession.sharedState().statusStore()
+        compiles = _codegen_compiles(self.spark)
         best = None
         sc.setJobDescription(spec.name)
         try:
             for _ in range(runs):
                 start_ms = int(time.time() * 1000)
+                n_compiled = compiles.getCount()
                 t0 = time.perf_counter()
                 df = spec.fn(self.spark, sf_dir)
                 t1 = time.perf_counter()
@@ -237,6 +247,7 @@ class Profiler:
                         "wall": t2 - t0, "fn": t1 - t0, "start_ms": start_ms,
                         "df_qe": df._jdf.queryExecution(), "write_qe": self._last_qe,
                         "eid": sql_store.executionsList(n - 1, 1).head().executionId(),
+                        "compiles": compiles.getCount() - n_compiled,
                     }
         finally:
             sc.setLocalProperty("spark.job.description", None)
@@ -258,7 +269,16 @@ class Profiler:
         layers.update(_stage_stats(jsc.statusStore(), execution.stages()))
         layers.update(_operator_stats(sql_store, eid))
         layers["execution_id"] = eid
+        layers["codegen_compiles"] = best["compiles"]
         return layers
+
+
+def _codegen_compiles(spark):
+    """Spark's JVM-wide histogram of Janino compile times: its count is
+    the number of generated classes compiled so far (cache hits do not
+    record). Its mean comes from a decaying sample, so only the count is
+    exact."""
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
 
 
 def _iter(seq):

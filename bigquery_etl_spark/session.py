@@ -31,6 +31,22 @@ def get_spark(
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or ``*``. In local mode the
     driver JVM is the whole cluster, so ``driver_memory`` is the only
     memory knob that matters.
+
+    ``spark.sql.codegen.cache.maxEntries`` (Spark's default 100) is set
+    to 1024. At 100, one pass over a few plans evicts the classes of the
+    first before it comes round again: a pass over the benchmark's six
+    ``queries`` statements compiles ~182 classes (q_ml_tfidf alone 87),
+    so every repeat re-ran Janino and started the fresh classes cold in
+    HotSpot. 1024 holds five such passes. Each cached class keeps ~30 KB
+    of heap and ~8 KB of metaspace (the whole registry at sf0.001 in a
+    1 GB-heap session: 389 / 420 / 509 MB live heap after GC at caps
+    100 / 1024 / 4096); 4096, enough for all ~3700 classes of the
+    registry, took down the test suite's 1 GB session partway through.
+    ``extra_conf`` still overrides it. It is a static conf, read once
+    when the JVM starts, so a session built elsewhere
+    (``tests/drive_entry.py``, a host passing its own session to
+    ``__spark_entry__.entry()``) keeps Spark's 100: ``ensure_workers``
+    cannot set it afterwards.
     """
     active = SparkSession.getActiveSession()
     if active is not None:
@@ -65,6 +81,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Python DataSource pushFilters (sources/lake_ds.py file skipping)
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        # compiled-class cache sized to the working set (docstring)
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
     )

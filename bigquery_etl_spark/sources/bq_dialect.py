@@ -1118,24 +1118,29 @@ def _literal_path(p: str, fn: str) -> str:
 
 
 def _json_set_rewriter(args: list[str]) -> str:
-    """``JSON_SET(j, path, value [, path2, value2 …])`` → chained
-    Arrow-batched mutator UDF calls (functions/json_mutators.py — the
-    sanctioned fallback tier: Spark has no subtree-rewrite builtin).
-    Values cross the string boundary as ``to_json(named_struct('v',
-    value))`` so their TYPE survives exactly; NULL values decode to
-    JSON null (BigQuery's rule)."""
+    """``JSON_SET(j, path, value [, path2, value2 …])`` → ONE Arrow-batched
+    mutator UDF call (functions/json_mutators.py — the sanctioned
+    fallback tier: Spark has no subtree-rewrite builtin), so the pairs
+    apply in order on one parse and plan one ArrowEvalPython node.
+    The paths arrive as one NUL-joined literal; the values cross the
+    string boundary as ``to_json(named_struct('v', v1, 'v1', v2, …))``
+    so their TYPE survives exactly; NULL values decode to JSON null
+    (BigQuery's rule)."""
     if len(args) < 3 or len(args) % 2 == 0:
         raise BQDialectError(
             f"JSON_SET expects (json, path, value [, path, value]…), got {args}"
         )
-    out = args[0].strip()
-    for i in range(1, len(args), 2):
-        p = _literal_path(args[i], "JSON_SET")
-        out = (
-            f"__bq_json_set({out}, {p}, "
-            f"TO_JSON(NAMED_STRUCT('v', {args[i + 1].strip()})))"
-        )
-    return out
+    paths = [_literal_path(p, "JSON_SET") for p in args[1::2]]
+    values = ", ".join(
+        f"'v{i or ''}', {v.strip()}" for i, v in enumerate(args[2::2])
+    )
+    path = paths[0] if len(paths) == 1 else (
+        "'" + "\\u0000".join(p[1:-1] for p in paths) + "'"
+    )
+    return (
+        f"__bq_json_set({args[0].strip()}, {path}, "
+        f"TO_JSON(NAMED_STRUCT({values})))"
+    )
 
 
 def _json_remove_rewriter(args: list[str]) -> str:

@@ -877,6 +877,38 @@ def test_json_remove_paths_are_one_call(fcat):
     assert rows[0].one == '{"a":1,"b":[3],"c":{}}'
     assert rows[2].one == '[0,{}]' and rows[4].one is None
 
+
+def test_json_set_pairs_are_one_call(fcat):
+    """A multi-pair JSON_SET is one UDF call (one ArrowEvalPython node)
+    that applies its pairs in order, equal to nesting single-pair
+    calls; a single pair keeps its one-literal-path spelling."""
+    from bigquery_etl_spark.sources.bq_dialect import translate
+
+    assert translate("SELECT JSON_SET(j, '$.a', 1) FROM t") == (
+        "SELECT __bq_json_set(j, '$.a', TO_JSON(NAMED_STRUCT('v', 1))) FROM t"
+    )
+    fcat.spark.createDataFrame(
+        [('{"a": 1, "b": [1]}',), ('{"a": [0]}',), ('[0, {"a": 2}]',),
+         ("not json",), (None,)],
+        "j string",
+    ).createOrReplaceTempView("js_docs")
+    two = fcat.bq_sql("SELECT JSON_SET(j, '$.a', 5, '$.c', 'x') AS two FROM js_docs")
+    plan = two._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    rows = fcat.bq_sql(
+        "SELECT JSON_SET(j, '$.a', 5, '$.b[2]', 'x', '$.a', NULL, "
+        "'$.a.x', TRUE, '$[1].a', 1.5) AS one, JSON_SET(JSON_SET(JSON_SET("
+        "JSON_SET(JSON_SET(j, '$.a', 5), '$.b[2]', 'x'), '$.a', NULL), "
+        "'$.a.x', TRUE), '$[1].a', 1.5) AS seq FROM js_docs"
+    ).collect()
+    assert [r.one for r in rows] == [r.seq for r in rows]
+    # the NULL pair overwrites the earlier 5; '$.a.x' then creates an
+    # object under the null, and '$[1].a' is a type mismatch on an
+    # object (on the array doc the object paths are the mismatches)
+    assert rows[0].one == '{"a":{"x":true},"b":[1,null,"x"]}'
+    assert rows[2].one == '[0,{"a":1.5}]' and rows[4].one is None
+
+
 def test_gis_area_perimeter_centroid_r8(fcat):
     import math
 
